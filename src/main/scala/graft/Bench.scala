@@ -80,7 +80,7 @@ object Bench {
     def drainListeners(): Unit =
       org.apache.spark.graftbridge.CoreBridge.waitListenerBusEmpty(spark.sparkContext, 2000)
     val cpuTimes = scala.collection.mutable.Map[String, List[Double]]().withDefaultValue(Nil)
-    val jobCounts = scala.collection.mutable.Map[String, Int]()
+    val jobCounts = scala.collection.mutable.Map[String, List[Int]]().withDefaultValue(Nil)
     val t0 = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - t0) / 1e9
     // optional comma-separated subset for targeted iteration (full run default)
@@ -219,12 +219,12 @@ object Bench {
       }
       val retriedJson = retried.toSeq.sorted.map(jq).mkString("[", ",", "]")
       val repsEffJson = measured.map(n => jq(n) + ":" + times(n).size).mkString("{", ",", "}")
-      // per-query executor CPU (min over reps, contention-robust like the
-      // wall minima) and job count — bench.json only, never the stdout line
+      // per-query executor CPU and job count (min over all reps, contention-
+      // robust like the wall minima) — bench.json only, never the stdout line
       val cpuJson = measured.filter(cpuTimes(_).nonEmpty)
         .map(n => jq(n) + ":" + r4(cpuTimes(n).min)).mkString("{", ",", "}")
-      val jobsJson = measured.filter(jobCounts.contains)
-        .map(n => jq(n) + ":" + jobCounts(n)).mkString("{", ",", "}")
+      val jobsJson = measured.filter(jobCounts(_).nonEmpty)
+        .map(n => jq(n) + ":" + jobCounts(n).min).mkString("{", ",", "}")
       val reasonsJson = contendedReasons.toSeq.map(jq).mkString("[", ",", "]")
       val fullLine =
         s"""{"metric":"total","value":${r4(totalMin)},"unit":"sec","stat":"min","partial":$partial,"covered":${measured.size},"book":${names.size},"queries":$qsMin,"errors":$errJson,"reps":$reps,"reps_effective_min":$repsEffMin,"reps_effective":$repsEffJson,"sf":${jq(sfDir)},"total_min":${r4(totalMin)},"total_median":${r4(total)},"queries_min":$qsMin,"queries_median":$qs,"queries_cpu":$cpuJson,"queries_jobs":$jobsJson,"loadavg_before":${jq(loadBefore)},"loadavg_after":${jq(loadAfter)},"contended":$contended,"contended_reasons":$reasonsJson,"uniform_inflation_uncorroborated":$uniformAlone,"retried":$retriedJson$vsBaselineJson}"""
@@ -292,7 +292,7 @@ object Bench {
           times(name) = dt :: times(name)
           drainListeners() // outside the timed window
           cpuTimes(name) = (cpuAcc.get - cpu0) / 1e9 :: cpuTimes(name)
-          jobCounts(name) = jobAcc.get - jobs0
+          jobCounts(name) = (jobAcc.get - jobs0) :: jobCounts(name)
           System.err.println(f"[bench] rep$rep $name ${dt}%.2fs (total ${elapsedS}%.1fs)")
         } catch { case e: Throwable =>
           errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(80)}"
@@ -318,7 +318,7 @@ object Bench {
           extra += 1
           if (!retried.contains(name)) retried += name
           drainListeners()
-          val cpu0 = cpuAcc.get
+          val cpu0 = cpuAcc.get; val jobs0 = jobAcc.get
           val s0 = System.nanoTime()
           try {
             exec(name)
@@ -326,6 +326,7 @@ object Bench {
             times(name) = dt :: times(name)
             drainListeners()
             cpuTimes(name) = (cpuAcc.get - cpu0) / 1e9 :: cpuTimes(name)
+            jobCounts(name) = (jobAcc.get - jobs0) :: jobCounts(name)
             System.err.println(f"[bench] retry$extra $name ${dt}%.2fs (contention adjudication)")
           } catch { case _: Throwable => extra = 2 } // warm rep failed: keep original reps
           writeArtifacts(partial = true)

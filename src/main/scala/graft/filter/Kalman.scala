@@ -33,6 +33,17 @@ case class KalmanIn(
     initialMean: Option[Array[Double]],
     initialCovariance: Option[DMat]) extends KeyedIn
 
+/** A per-row matrix column rebuilt by field name as the canonical struct the
+  * kernels read by position (a positional cast would swap the dimensions of
+  * a (numCols, numRows, values) struct); `None` is a typed null. */
+private[filter] object MatCol {
+  def apply(m: Option[Column]): Column = m match {
+    case Some(c) => when(c.isNotNull, struct(c("numRows").cast("int").as("numRows"),
+      c("numCols").cast("int").as("numCols"), c("values").cast("array<double>").as("values")))
+    case None => lit(null).cast("struct<numRows:int,numCols:int,values:array<double>>")
+  }
+}
+
 /** Constant (non-per-row) filter configuration resolved into rows by the spec. */
 case class KalmanDefaults(
     measurementModel: DMat,
@@ -359,16 +370,7 @@ abstract class KalmanFilterBase[Impl <: KalmanFilterBase[Impl]](
 
   protected def storeResidual: Boolean = calcLoglikelihood || calcMahalanobis || calcSlidingLikelihood
 
-  private val matStructType = "struct<numRows:int,numCols:int,values:array<double>>"
-
-  /** Per-row matrix columns are cast to the canonical
-    * (numRows int, numCols int, values array<double>) struct so the kernel's
-    * positional reads and the encoder's resolution see the same layout
-    * (no-op for the canonical structs every caller builds). */
-  private def matCol(colName: Option[String]): Column = colName match {
-    case Some(c) => col(c).cast(matStructType)
-    case None => lit(null).cast(matStructType)
-  }
+  private def matCol(colName: Option[String]): Column = MatCol(colName.map(col))
 
   /** Canonical 11-column input projection shared by the encoder path
     * (`toKalmanInput`) and the InternalRow kernel (`KalmanRowKernel` reads
@@ -387,13 +389,12 @@ abstract class KalmanFilterBase[Impl <: KalmanFilterBase[Impl]](
       matCol(processModelCol).as("processModel"),
       matCol(processNoiseCol).as("processNoise"),
       controlCol.map(c => col(c).cast("array<double>")).getOrElse(lit(null).cast("array<double>")).as("control"),
-      controlFunctionCol.map(c => col(c).cast(matStructType)).getOrElse(lit(null).cast(matStructType)).as("controlFunction"),
+      matCol(controlFunctionCol).as("controlFunction"),
       initialStateDistributionCol.map(c => col(c).getField("mean").cast("array<double>"))
         .orElse(initialStateMeanCol.map(c => col(c).cast("array<double>")))
         .getOrElse(lit(null).cast("array<double>")).as("initialMean"),
-      initialStateDistributionCol.map(c => col(c).getField("covariance").cast(matStructType))
-        .orElse(initialStateCovarianceCol.map(c => col(c).cast(matStructType)))
-        .getOrElse(lit(null).cast(matStructType)).as("initialCovariance")
+      MatCol(initialStateDistributionCol.map(c => col(c).getField("covariance"))
+        .orElse(initialStateCovarianceCol.map(col))).as("initialCovariance")
     )
   }
 
@@ -437,17 +438,12 @@ abstract class KalmanFilterBase[Impl <: KalmanFilterBase[Impl]](
           hasCtlFn = controlFunctionCol.isDefined,
           hasIM = initialStateDistributionCol.isDefined || initialStateMeanCol.isDefined,
           hasIC = initialStateDistributionCol.isDefined || initialStateCovarianceCol.isDefined)
-        StatefulStage.batchRows(kalmanProjection(df), KalmanRowKernel.outputSchema,
-          assumeUnique = assumeUniqueEventTimes)(kernel.run)
+        StatefulStage.foldRows(kalmanProjection(df), KalmanRowKernel.outputSchema,
+          tiebreak = !assumeUniqueEventTimes)(kernel.run)
       }
     val out = finalizeColumns(out0)
     if (mmaeEnabled) mmaeAggregate(out) else out
   }
-
-  /** Executed plan of the kernel's inner (exchange + sort) frame — plan-pin
-    * test support. */
-  private[graft] def batchInnerPlan(df: DataFrame): String =
-    StatefulStage.batchInnerPlan(kalmanProjection(df), assumeUniqueEventTimes)
 
   /** Encoder-path batch execution — the pre-kernel physical plan, kept as
     * the executable reference for the bit-exactness pin (KalmanKernelPinSpec)

@@ -88,8 +88,6 @@ class RecursiveLeastSquaresFilter(val featuresSize: Int) {
   def setAssumeUniqueEventTimes(): this.type = { assumeUniqueEventTimes = true; this }
   private var assumeUniqueEventTimes: Boolean = false
 
-  private val matStructType = "struct<numRows:int,numCols:int,values:array<double>>"
-
   def transform(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
@@ -116,8 +114,8 @@ class RecursiveLeastSquaresFilter(val featuresSize: Int) {
       // encoder path ships ~(n + n²) doubles of constants per row).
       val imExpr = initialStateDistributionCol.map(c => col(c).getField("mean").cast("array<double>"))
         .orElse(initialEstimateCol.map(c => col(c).cast("array<double>")))
-      val icExpr = initialStateDistributionCol.map(c => col(c).getField("covariance").cast(matStructType))
-        .orElse(regularizationMatrixCol.map(c => col(c).cast(matStructType)))
+      val icExpr = initialStateDistributionCol.map(c => col(c).getField("covariance"))
+        .orElse(regularizationMatrixCol.map(col)).map(c => MatCol(Some(c)))
       val cols = scala.collection.mutable.ArrayBuffer(
         keyExpr.as("stateKey"),
         timeExpr.as("eventTime"),
@@ -129,8 +127,8 @@ class RecursiveLeastSquaresFilter(val featuresSize: Int) {
       val kernel = new RlsRowKernel(forgettingFactor, featuresSize,
         initialEstimate, regularizationMatrix,
         hasIM = imExpr.isDefined, hasIC = icExpr.isDefined)
-      StatefulStage.batchRows(df.select(cols.toSeq: _*), RlsRowKernel.outputSchema,
-        assumeUnique = assumeUniqueEventTimes)(kernel.run)
+      StatefulStage.foldRows(df.select(cols.toSeq: _*), RlsRowKernel.outputSchema,
+        tiebreak = !assumeUniqueEventTimes)(kernel.run)
     }
     var res = out
     stateKeyCol.foreach(c => res = res.withColumnRenamed("stateKey", c))
@@ -285,8 +283,8 @@ class LeastMeanSquaresFilter(val featuresSize: Int) {
       initialEstimateCol.foreach(c => cols += col(c).cast("array<double>").as("initialMean"))
       val kernel = new LmsRowKernel(learningRate, regularization,
         initialEstimate, hasIM = initialEstimateCol.isDefined)
-      StatefulStage.batchRows(df.select(cols.toSeq: _*), LmsRowKernel.outputSchema,
-        assumeUnique = assumeUniqueEventTimes)(kernel.run)
+      StatefulStage.foldRows(df.select(cols.toSeq: _*), LmsRowKernel.outputSchema,
+        tiebreak = !assumeUniqueEventTimes)(kernel.run)
     }
     var res = out
     stateKeyCol.foreach(c => res = res.withColumnRenamed("stateKey", c))

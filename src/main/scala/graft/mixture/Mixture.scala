@@ -351,8 +351,8 @@ abstract class MixtureBase[Impl <: MixtureBase[Impl]](val mixtureCount: Int) { s
       // InternalRow kernel (round 14): the online stochastic-EM fold
       // without the per-row Dataset-encoder round trip
       val kernel = new MixtureRowKernel(family, mixtureCount, initialWeights, initialParams)
-      StatefulStage.batchRows(mixProjection(df), MixtureRowKernel.outputSchema,
-        assumeUnique = false)(kernel.run)
+      StatefulStage.foldRows(mixProjection(df), MixtureRowKernel.outputSchema,
+        tiebreak = true)(kernel.run)
     })
     var res = out
     stateKeyCol.foreach(c => res = res.withColumnRenamed("stateKey", c))

@@ -160,10 +160,10 @@ class LinearKalmanSmoother(stateSize: Int, measurementSize: Int)
     out
   }
 
-  /** Full-pass RTS at InternalRow level: forward kernel (one exchange on
-    * stateKey + sort), then the backward kernel over a LOCAL re-sort of the
-    * same partitions — the forward output is already key-partitioned
-    * physically, so the second exchange of the encoder path is gone
+  /** Full-pass RTS at InternalRow level: forward fold (one exchange on
+    * stateKey + sort), then the backward fold, which the planner gives a
+    * LOCAL re-sort only — the forward fold's output keeps its input's
+    * stateKey partitioning, so the encoder path's second exchange is gone
     * (2 Exchange → 1). Bit-exact vs [[smoothEncoderBatch]]
     * (KalmanKernelPinSpec). */
   def smooth(df: DataFrame): DataFrame = {
@@ -177,12 +177,11 @@ class LinearKalmanSmoother(stateSize: Int, measurementSize: Int)
       hasCtlFn = controlFunctionCol.isDefined,
       hasIM = initialStateDistributionCol.isDefined || initialStateMeanCol.isDefined,
       hasIC = initialStateDistributionCol.isDefined || initialStateCovarianceCol.isDefined)
-    val fwdDF = StatefulStage.batchRows(kalmanProjection(df),
-      RtsForwardRowKernel.outputSchema, assumeUnique = assumeUniqueEventTimes)(fwdKernel.run)
+    val fwdDF = StatefulStage.foldRows(kalmanProjection(df),
+      RtsForwardRowKernel.outputSchema, tiebreak = !assumeUniqueEventTimes)(fwdKernel.run)
     val bwdKernel = new RtsBackwardRowKernel(stateSize)
-    val smoothed = StatefulStage.mapSortedPartitions(fwdDF,
-      Seq(col("stateKey"), col("stateIndex").desc),
-      RtsBackwardRowKernel.outputSchema)(bwdKernel.run)
+    val smoothed = StatefulStage.foldRows(fwdDF, RtsBackwardRowKernel.outputSchema,
+      tiebreak = false, Seq(col("stateKey"), col("stateIndex").desc))(bwdKernel.run)
     var out = smoothed
     stateKeyCol.foreach(c => out = out.withColumnRenamed("stateKey", c))
     eventTimeCol match {

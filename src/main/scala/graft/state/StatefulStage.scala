@@ -2,9 +2,14 @@ package graft.state
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.functions.{col, xxhash64}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.StructType
 
 /** Input rows to a stateful stage carry a grouping key and optional event time. */
 trait KeyedIn extends Serializable {
@@ -89,8 +94,7 @@ object StatefulStage {
         ds.repartition(col("stateKey"))
           .sortWithinPartitions(col("stateKey"), col("eventTime"))
       else
-        ds.withColumn("__rowSeq",
-            org.apache.spark.sql.functions.xxhash64(ds.columns.map(col): _*))
+        ds.withColumn("__rowSeq", xxhash64(ds.columns.map(col): _*))
           .repartition(col("stateKey"))
           .sortWithinPartitions(col("stateKey"), col("eventTime"), col("__rowSeq"))
           .drop("__rowSeq")
@@ -124,88 +128,24 @@ object StatefulStage {
       }
   }
 
-  /**
-   * InternalRow-level batch path: same partitioning/ordering contract as
-   * [[batch]] (one exchange on stateKey + external sort, deterministic
-   * tiebreak hash unless the caller declares (key, time) unique), but the
-   * per-partition fold runs directly on Tungsten rows — no Dataset-encoder
-   * round trip per row. The caller supplies the canonical input projection
-   * as a DataFrame whose first two columns are (stateKey, eventTime) and a
-   * kernel that folds one sorted partition of InternalRows; kernels must
-   * replicate the matching StateSpec's floating-point operation order
-   * bit-for-bit (pinned by the *KernelPinSpec suites).
-   *
-   * The inner plan is built with AQE off so that `toRdd` stays lazy (an
-   * AdaptiveSparkPlanExec would eagerly run its shuffle stages at plan
-   * time); the exchange therefore fans out to exactly
-   * spark.sql.shuffle.partitions — the same scale-configured knob the AQE
-   * path bottoms out at under parallelismFirst coalescing.
-   *
-   * Tiebreak note: __rowSeq is xxhash64 over THIS projection's columns, so
-   * a kernel projection that drops constant columns carried by the encoder
-   * path yields a different (still deterministic, still
-   * input-repartitioning-stable) permutation of duplicate (key, time) rows.
-   * Rows that tie on (key, time) and differ elsewhere have no defined fold
-   * order in either path.
-   */
-  def batchRows(in: DataFrame, outSchema: org.apache.spark.sql.types.StructType,
-      assumeUnique: Boolean)(
-      kernel: Iterator[org.apache.spark.sql.catalyst.InternalRow] =>
-        Iterator[org.apache.spark.sql.catalyst.InternalRow]): DataFrame = {
-    val ordered = orderedFrame(in, assumeUnique)
-    val session = in.sparkSession
-    val prevAqe = session.conf.get("spark.sql.adaptive.enabled", "true")
-    session.conf.set("spark.sql.adaptive.enabled", "false")
-    val rdd =
-      try ordered.queryExecution.toRdd.mapPartitions(kernel)
-      finally session.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    org.apache.spark.sql.graftbridge.Bridge.internalDF(session, rdd, outSchema)
-  }
-
-  /** The exchange+sort the batch kernels fold over — identical contract to
-    * [[batch]]'s ordering. */
-  private def orderedFrame(in: DataFrame, assumeUnique: Boolean): DataFrame =
-    if (assumeUnique)
-      in.repartition(col("stateKey"))
-        .sortWithinPartitions(col("stateKey"), col("eventTime"))
-    else
-      in.withColumn("__rowSeq",
-          org.apache.spark.sql.functions.xxhash64(in.columns.map(col): _*))
-        .repartition(col("stateKey"))
-        .sortWithinPartitions(col("stateKey"), col("eventTime"), col("__rowSeq"))
-        .drop("__rowSeq")
-
-  /** Executed plan of the inner ordered frame — plan-pin test support: the
-    * kernel consumes this frame behind an RDD boundary, so the outer
-    * query's explain only shows `Scan ExistingRDD`. */
-  private[graft] def batchInnerPlan(in: DataFrame, assumeUnique: Boolean): String = {
-    val session = in.sparkSession
-    val prevAqe = session.conf.get("spark.sql.adaptive.enabled", "true")
-    session.conf.set("spark.sql.adaptive.enabled", "false")
-    try orderedFrame(in, assumeUnique).queryExecution.executedPlan.toString
-    finally session.conf.set("spark.sql.adaptive.enabled", prevAqe)
-  }
-
-  /**
-   * Second-stage InternalRow fold over an ALREADY key-partitioned frame
-   * (e.g. the output of [[batchRows]]): local re-sort only, NO exchange —
-   * mapPartitions preserves physical partition assignment, so every key's
-   * rows are still co-located even though the planner can no longer prove
-   * it. Used by the RTS backward pass (was a second full shuffle of the
-   * forward output).
-   */
-  def mapSortedPartitions(in: DataFrame, sortCols: Seq[org.apache.spark.sql.Column],
-      outSchema: org.apache.spark.sql.types.StructType)(
-      kernel: Iterator[org.apache.spark.sql.catalyst.InternalRow] =>
-        Iterator[org.apache.spark.sql.catalyst.InternalRow]): DataFrame = {
-    val ordered = in.sortWithinPartitions(sortCols: _*)
-    val session = in.sparkSession
-    val prevAqe = session.conf.get("spark.sql.adaptive.enabled", "true")
-    session.conf.set("spark.sql.adaptive.enabled", "false")
-    val rdd =
-      try ordered.queryExecution.toRdd.mapPartitions(kernel)
-      finally session.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    org.apache.spark.sql.graftbridge.Bridge.internalDF(session, rdd, outSchema)
+  /** InternalRow-level batch path, as a planner-visible [[KeyedFold]] node:
+    * the planner clusters the input by stateKey and sorts it by `order` (a
+    * local sort only under another fold, as in the RTS backward pass). With
+    * `tiebreak`, `__rowSeq` (xxhash64 over `in`'s columns) rides as a trailing
+    * sort column the kernels' fixed ordinals ignore. Kernels replicate their
+    * StateSpec's floating-point order bit-for-bit (the *KernelPinSpec suites)
+    * and emit `in`'s stateKey unchanged as output column 0. Tied (key, time)
+    * rows that differ elsewhere have no defined fold order in any engine. */
+  def foldRows(in: DataFrame, outSchema: StructType, tiebreak: Boolean,
+      order: Seq[Column] = Seq(col("stateKey"), col("eventTime")))(
+      kernel: Iterator[InternalRow] => Iterator[InternalRow]): DataFrame = {
+    val (child, sortCols) =
+      if (tiebreak) (in.withColumn("__rowSeq", xxhash64(in.columns.map(col): _*)), order :+ col("__rowSeq"))
+      else (in, order)
+    val sorted = child.sortWithinPartitions(sortCols: _*).queryExecution.analyzed.asInstanceOf[Sort]
+    KeyedFoldStrategy.install(in.sparkSession)
+    Bridge.ofRows(in.sparkSession,
+      KeyedFold(sorted.order, kernel, DataTypeUtils.toAttributes(outSchema), sorted.child))
   }
 
   def stream[I <: KeyedIn, S, O](ds: Dataset[I], spec: StateSpec[I, S, O], conf: StageConf)(

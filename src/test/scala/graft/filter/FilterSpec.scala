@@ -217,4 +217,24 @@ class FilterSpec extends AnyFunSuite with SparkTestSession {
       assert(math.abs(bm - sm) < 1e-12)
     }
   }
+
+  test("per-row matrix structs resolve by field name, not by position") {
+    import spark.implicits._
+    // a 1x2 measurement model: a positional cast of a (numCols, numRows,
+    // values) struct would read it as 2x1, and h.multiply(state) would
+    // then drop the second state component
+    val df = (0 until 20).map(i => ("a", ts(i), Array(i * 0.3), 1.0 + i * 0.1)).toDF("key", "t", "meas", "x")
+    def states(h: org.apache.spark.sql.Column) = new ExtendedKalmanFilter(2, 1)
+      .setStateKeyCol("key").setEventTimeCol("t").setMeasurementCol("meas")
+      .setMeasurementModelCol("hmat")
+      .setMeasurementFunction((st, h) => h.multiply(st))
+      .setMeasurementStateJacobian((_, h) => h)
+      .setInitialStateCovariance(DMat.of(2, 2, 10.0, 0.0, 0.0, 10.0))
+      .transform(df.withColumn("hmat", h))
+      .orderBy("stateIndex").select("stateMean").as[Seq[Double]].collect().toSeq
+    val values = array(lit(1.0), col("x")).as("values")
+    val canonical = states(struct(lit(1).as("numRows"), lit(2).as("numCols"), values))
+    val reordered = states(struct(lit(2).as("numCols"), lit(1).as("numRows"), values))
+    assert(canonical.size == 20 && reordered == canonical)
+  }
 }

@@ -232,10 +232,13 @@ class KalmanKernelPinSpec extends AnyFunSuite with SparkTestSession {
     }
     assertBitIdentical(build().smooth(df), build().smoothEncoderBatch(df),
       Seq("key", "stateIndex"))
-    // plan shape: exactly one Exchange in the whole two-pass pipeline
+    // plan shape: exactly one Exchange in the whole two-pass pipeline, below
+    // the forward fold — none between the two KeyedFold nodes
     val plan = build().smooth(df).queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"),
-      "outer plan over the kernel RDD must not re-shuffle the smoothed rows")
+    assert("Exchange".r.findAllIn(plan).size == 1, plan)
+    val folds = "KeyedFold".r.findAllMatchIn(plan).map(_.start).toList
+    assert(folds.size == 2, plan)
+    assert(!plan.substring(folds(0), folds(1)).contains("Exchange"), plan)
   }
 
   test("assumeUniqueEventTimes kernel path == default path on unique (key,time) input") {
